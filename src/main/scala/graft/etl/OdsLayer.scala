@@ -315,9 +315,13 @@ object OdsLayer {
       col("reorder_point"), col("last_restock_date")))
   }
 
-  /** Build all nine ODS tables from the csv frame. */
+  /** Build all nine ODS tables from the csv frame. The csv is cached
+    * and filled here, once: [[Warehouse.writeAll]] writes the nine
+    * tables concurrently, and writers that met an unfilled cache would
+    * each rescan the file to fill it. */
   def build(csv: DataFrame, ctx: RunContext): Tables = {
     val c = csv.cache()
+    c.count()
     val dateDf = date(c, ctx)
     val supplierDf = supplier(c, ctx)
     val productDf = product(c, supplierDf, ctx)

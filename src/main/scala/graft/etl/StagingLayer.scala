@@ -319,19 +319,24 @@ object StagingLayer {
       (stock > 0).as("is_in_stock"))))
   }
 
-  /** Build all nine staging tables from ODS frames. */
+  /** Build all nine staging tables from ODS frames. Surrogate keys are
+    * eager (one job per table, [[SurrogateKeys.dense]]), so the six
+    * dimensions are keyed concurrently, then the three facts that join
+    * them. */
   def build(ods: OdsLayer.Tables, ctx: RunContext): Tables = {
-    val d = date(ods.date, ctx).cache()
-    val c = customer(ods.customer, ctx)
-    val p = product(ods.product, ods.supplier, ctx).cache()
-    val st = store(ods.store, ctx).cache()
-    val su = supplier(ods.supplier, ctx)
-    val rr = returnReason(ods.returnReason, ctx).cache()
+    val Seq(d, c, p, st, su, rr) = Concurrently.run(Seq(
+      () => date(ods.date, ctx).cache(),
+      () => customer(ods.customer, ctx),
+      () => product(ods.product, ods.supplier, ctx).cache(),
+      () => store(ods.store, ctx).cache(),
+      () => supplier(ods.supplier, ctx),
+      () => returnReason(ods.returnReason, ctx).cache()))
+    val Seq(sa, rt, inv) = Concurrently.run(Seq(
+      () => sales(ods.sales, d, c, p, st, ctx),
+      () => returns(ods.returns, d, p, st, rr, ctx),
+      () => inventory(ods.inventory, d, p, st, ctx)))
     Tables(
       date = d, customer = c, product = p, store = st, supplier = su,
-      returnReason = rr,
-      sales = sales(ods.sales, d, c, p, st, ctx),
-      returns = returns(ods.returns, d, p, st, rr, ctx),
-      inventory = inventory(ods.inventory, d, p, st, ctx))
+      returnReason = rr, sales = sa, returns = rt, inventory = inv)
   }
 }

@@ -226,26 +226,27 @@ object TargetLayer {
 
   /** Build the full target layer from staging + the prior target dim
     * states (None on first load). Renamed `*_key2` columns are the
-    * target-side surrogates, kept distinct from staging's. */
+    * target-side surrogates, kept distinct from staging's. The eager
+    * surrogate keys of the four SCD1 dimensions and the two keyed SCD2
+    * dimensions are independent jobs, computed concurrently. */
   def build(stg: StagingLayer.Tables,
       prior: String => Option[DataFrame], ctx: RunContext): Tables = {
-    val date = scd1(prior("tgt_dim_date"), stg.date, "date_id",
-      Seq(col("etl_timestamp").desc, col("full_date").desc), "date_key")
-      .cache()
-    val customer = scd1(prior("tgt_dim_customer"), stg.customer, "customer_id",
-      Seq(col("customer_name").asc, col("city").asc), "customer_key")
-    val supplier = scd1(prior("tgt_dim_supplier"), stg.supplier, "supplier_id",
-      Seq(col("supplier_name").asc, col("contact_name").asc), "supplier_key")
-    val reason = scd1(prior("tgt_dim_return_reason"), stg.returnReason, "reason_code",
-      Seq(col("reason_description").asc, col("reason_category").asc), "reason_key")
-      .cache()
     val product = scd2(prior("tgt_dim_product"), stg.product, "product_id",
       productTracked, ctx).cache()
     val store = scd2(prior("tgt_dim_store"), stg.store, "store_id",
       storeTracked, ctx).cache()
-
-    val productK = withScdKey(product, "product_id", "product_key2")
-    val storeK = withScdKey(store, "store_id", "store_key2")
+    val Seq(date, customer, supplier, reason, productK, storeK) = Concurrently.run(Seq(
+      () => scd1(prior("tgt_dim_date"), stg.date, "date_id",
+        Seq(col("etl_timestamp").desc, col("full_date").desc), "date_key").cache(),
+      () => scd1(prior("tgt_dim_customer"), stg.customer, "customer_id",
+        Seq(col("customer_name").asc, col("city").asc), "customer_key"),
+      () => scd1(prior("tgt_dim_supplier"), stg.supplier, "supplier_id",
+        Seq(col("supplier_name").asc, col("contact_name").asc), "supplier_key"),
+      () => scd1(prior("tgt_dim_return_reason"), stg.returnReason, "reason_code",
+        Seq(col("reason_description").asc, col("reason_category").asc), "reason_key")
+        .cache(),
+      () => withScdKey(product, "product_id", "product_key2"),
+      () => withScdKey(store, "store_id", "store_key2")))
     val customerK = customer.withColumnRenamed("customer_key", "customer_key2")
     val reasonK = reason.withColumnRenamed("reason_key", "reason_key2")
 

@@ -1,7 +1,8 @@
 package graft.etl
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Table lifecycle over a parquet warehouse directory (SURVEY S4/S7/S9
   * — the reference's CREATE/TRUNCATE/DROP DDL and temp-table insert
@@ -97,28 +98,40 @@ final class Warehouse(spark: SparkSession, baseDir: String) {
     * dimensions whose prior files an eager per-table swap would have
     * already deleted (the SCD frames read their own prior state).
     * `partitionCols` opts individual tables into Hive-style
-    * partitioned layout (see [[writePartitioned]]). */
+    * partitioned layout (see [[writePartitioned]]).
+    *
+    * The frames are staged concurrently ([[Concurrently]]): each write
+    * is its own job, and no frame reads another's tmp dir. The swaps
+    * start only once every staged write has succeeded; if one fails,
+    * the others still finish, nothing is swapped and the error is
+    * rethrown, so every table keeps its prior state.
+    *
+    * Returns the rows written to each table, counted by an
+    * [[Observation]] on the written frame: exact, because the count is
+    * taken over the rows of the one write execution (never over a
+    * lazily filled cache, which would count only the partitions it
+    * computed), and free, because it adds no job. */
   def writeAll(tables: Seq[(String, DataFrame)],
-      partitionCols: Map[String, Seq[String]] = Map.empty): Unit = {
-    val staged = tables.map { case (table, df) =>
+      partitionCols: Map[String, Seq[String]] = Map.empty): Map[String, Long] = {
+    val staged = Concurrently.run(tables.map { case (table, df) => () =>
       val tmp = new Path(baseDir, table + ".__tmp")
       fs.delete(tmp, true)
-      val w = df.write.mode("overwrite")
-      partitionCols.get(table).filter(_.nonEmpty)
-        .fold(w)(cs => w.partitionBy(cs: _*))
-        .parquet(tmp.toString)
+      val rows = Observation()
+      val parts = partitionCols.getOrElse(table, Nil)
+      val w = df.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite")
+      (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(tmp.toString)
       // a partitioned write of an EMPTY frame leaves no partition dirs
       // and no data files — read-back could not even infer a schema.
       // Park an empty unpartitioned file carrying the schema instead
       // (detected by dir listing, no extra job against the frame).
-      if (partitionCols.get(table).exists(_.nonEmpty)
-          && !fs.listStatus(tmp).exists(_.isDirectory))
+      if (parts.nonEmpty && !fs.listStatus(tmp).exists(_.isDirectory))
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
           .write.mode("overwrite").parquet(tmp.toString)
-      table -> tmp
-    }
-    staged.foreach { case (table, tmp) => swapIn(table, tmp) }
+      (table, tmp, rows.get("rows").asInstanceOf[Long])
+    })
+    staged.foreach { case (table, tmp, _) => swapIn(table, tmp) }
+    staged.map { case (table, _, n) => table -> n }.toMap
   }
 
   def drop(table: String): Unit = fs.delete(path(table), true)
