@@ -25,44 +25,6 @@ object Scratch {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (name == "stages") { minhashStages(spark, sfDir); spark.stop(); return }
-    if (name == "width") {
-      // width <qname> [sfDir]: run one query under a narrow and a wide
-      // session-level partitioning conf and diff the collected rows —
-      // the dev-loop twin of WidthDeterminismSpec
-      val qname = args(1)
-      val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-      val bad = widthDiff(spark, qname, dir, verbose = true)
-      println(if (bad) s"[scratch] $qname: WIDTH-DEPENDENT" else s"[scratch] $qname: stable")
-      spark.stop(); return
-    }
-    if (name == "widthall") {
-      val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-      val flagged = SparkEntry.queries.keys.toSeq.sorted.filter { qname =>
-        val bad = try widthDiff(spark, qname, dir, verbose = false)
-        catch { case e: Throwable =>
-          println(s"[scratch] $qname: ERROR ${e.getMessage.take(120)}"); false }
-        println(s"[scratch] $qname: " + (if (bad) "WIDTH-DEPENDENT" else "ok"))
-        bad
-      }
-      println(s"[scratch] flagged: ${flagged.mkString(", ")}")
-      spark.stop(); return
-    }
-    if (name == "riskscan") {
-      // riskscan [sfDir]: build every declared query's plan and print
-      // the width-risk reasons the detector sees — the dev-loop twin
-      // of WidthDeterminismSpec's self-enrollment gate
-      val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-      var n = 0
-      SparkEntry.queries.keys.toSeq.sorted.foreach { qname =>
-        val reasons = try queryRiskReasons(spark, qname, dir)
-        catch { case e: Throwable =>
-          println(s"[scratch] $qname: ERROR ${e.getMessage.take(120)}"); Nil }
-        if (reasons.nonEmpty) { n += 1
-          println(s"[scratch] $qname: ${reasons.mkString("; ")}") }
-      }
-      println(s"[scratch] riskscan: $n flagged of ${SparkEntry.queries.size}")
-      spark.stop(); return
-    }
     if (name == "appendstages") { appendStages(spark, sfDir); spark.stop(); return }
     if (name == "containstages") { containStages(spark, sfDir); spark.stop(); return }
     if (name == "q61stages") { pipelineStages(spark, sfDir); spark.stop(); return }
@@ -193,9 +155,8 @@ object Scratch {
     if (name == "plans") {
       // plans <outDir> [sfDir] [qname,qname,...]: write each query's
       // explain("formatted") to <outDir>/<qname>.txt — the plan-claim
-      // evidence files under plans/rNN/ (judge checks claims against
-      // these). Building a frame is cheap; streams inside a build run
-      // eagerly, same as riskscan.
+      // evidence files under plans/rNN/. Building a frame is cheap;
+      // streams inside a build run eagerly.
       val outDir = java.nio.file.Paths.get(args(1))
       java.nio.file.Files.createDirectories(outDir)
       val dir = if (args.length > 2) args(2) else sfDir
@@ -239,93 +200,6 @@ object Scratch {
       println(s"[scratch] run $i: $n rows in ${(System.nanoTime() - t0) / 1e9} s")
     }
     spark.stop()
-  }
-
-  /** Runs `qname` under two sessions that differ only in partitioning
-    * width (shuffle partitions + scan split width) and compares the
-    * collected, canonically-sorted rows. Returns true when the outputs
-    * DIFFER — i.e. the query's result depends on partial-aggregation
-    * order, the q95 failure class. */
-  /** Plan-walk width-risk detector: reasons this frame's OPTIMIZED
-    * plan suggests the output could depend on partition width —
-    * Spark's partial-aggregation order varies with scan/shuffle
-    * width, so floating-point reductions and width-sensitive sketches
-    * are the enrollment signal for [[WidthDeterminismSpec]]'s gate.
-    *
-    * Flags: (a) `avg`/`sum` over Double/Float anywhere in the plan
-    * (the q95 class — float addition is non-associative, so ANY
-    * reassociation can flip the last digit whether or not a `round`
-    * sits above it); (b) `percentile_approx` (the sketch's merge
-    * order is width-dependent by design); (c) `flatMapGroupsWithState`
-    * / `mapGroupsWithState` (a custom stateful reducer — its per-key
-    * fold can depend on batching/arrival grouping).
-    *
-    * The r9 blind spots are now mechanized, not hand-floored:
-    *  - checkpoint-truncated plans: every
-    *    [[graft.operators.Checkpoints]] materialization registers its
-    *    pre-materialization plan's REASONS (and aux plans like
-    *    PrefixSum's splitter sketch) keyed by what the downstream plan
-    *    scans; the walker reads
-    *    [[graft.operators.Checkpoints.registeredReasons]];
-    *  - streaming queries: every memory-sink stream records its
-    *    analyzed plan in [[graft.streaming.StreamPlans]]; callers
-    *    bracket a query build with `mark()`/`since()` and walk the
-    *    recorded plans with [[planRiskReasons]] (see the enrollment
-    *    gate in WidthDeterminismSpec and the `riskscan` mode here).
-    */
-  def widthRiskReasons(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    planRiskReasons(df.queryExecution.optimizedPlan)
-
-  /** Full risk scan of one DECLARED query: builds its frame (which
-    * RUNS any streams inside it — streaming queries are eager) and
-    * combines the batch-plan reasons with the reasons of every stream
-    * plan the build recorded. This is the one detector entry point
-    * with NO structural blind spot — the enrollment gate's call. */
-  def queryRiskReasons(spark: SparkSession, qname: String,
-      dir: String): Seq[String] = {
-    val mark = graft.streaming.StreamPlans.mark()
-    val df = SparkEntry.queries(qname)(spark, dir)
-    val batch = widthRiskReasons(df)
-    val streams = graft.streaming.StreamPlans.since(mark).flatMap {
-      case (sink, p) => planRiskReasons(p).map(r => s"stream[$sink]: $r")
-    }
-    (batch ++ streams).distinct
-  }
-
-  /** [[widthRiskReasons]] over a bare plan (a streaming query's
-    * analyzed plan): the plan's own reasons
-    * ([[graft.operators.WidthRisk.ownReasons]]) plus whatever the
-    * checkpoint registry recorded for the plan's leaves — the
-    * registry's strings already carry the transitive closure through
-    * chained checkpoints, so one leaf lookup sees the whole chain. */
-  def planRiskReasons(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] =
-    (graft.operators.WidthRisk.ownReasons(plan) ++
-      graft.operators.Checkpoints.registeredReasons(plan)
-        .map(r => s"via checkpoint: $r")).distinct
-
-  def widthDiff(spark: SparkSession, qname: String, sfDir: String,
-      verbose: Boolean): Boolean = {
-    val fn = SparkEntry.queries(qname)
-    def runAt(shuffle: Int, minSplits: Int): Seq[String] = {
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", shuffle)
-      s.conf.set("spark.sql.files.minPartitionNum", minSplits)
-      s.conf.set("spark.sql.leafNodeDefaultParallelism", minSplits)
-      fn(s, sfDir).collect()
-        .map(_.toSeq.map(v => if (v == null) "\u2400" else v.toString).mkString("|"))
-        .toSeq.sorted
-    }
-    val narrow = runAt(3, 1)
-    val wide = runAt(32, 32)
-    val differ = narrow != wide
-    if (differ && verbose) {
-      narrow.zipAll(wide, "<missing>", "<missing>").filter(p => p._1 != p._2)
-        .take(10).foreach { case (a, b) =>
-          println(s"[scratch]   narrow: $a\n[scratch]   wide:   $b")
-        }
-    }
-    differ
   }
 
   /** Job-level timeline of one warm q61 run: every Spark job's span

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Lineage-truncation policy for this library, split by lifetime:
   *
@@ -60,143 +59,12 @@ object Checkpoints {
     * deletion — observability for tests and operators. */
   def deferredCount: Int = deferred.size
 
-  // --------------------------------------------------------------------
-  // Pre-materialization risk-reason registry (width-risk detector
-  // support).
-  //
-  // A checkpoint TRUNCATES lineage: downstream plans see only a
-  // LogicalRDD (localCheckpoint) or a parquet scan (reliable), so a
-  // plan-walking detector ([[graft.Scratch.widthRiskReasons]]) cannot
-  // see the width-sensitive reducers the checkpoint hides — the r9
-  // verdict's documented blind spot. Every checkpoint here therefore
-  // records what it materialized, keyed by what the DOWNSTREAM plan
-  // will contain (the checkpointed RDD's id, or the written path), so
-  // the walker can look through the truncation. Operators whose
-  // width-sensitive machinery runs in a SEPARATE collected action
-  // (PrefixSum's splitter sketch) attach that action's plan via
-  // [[attachAux]].
-  //
-  // The registry stores extracted REASON STRINGS, not the plans: a
-  // retained LogicalPlan strongly references its LogicalRDD leaves,
-  // which reference the checkpointed RDDs — so a <cap-entry iterative
-  // job (a 40-round connected-components loop on the localCheckpoint
-  // fallback) would never evict and every superseded round's
-  // corpus-scale blocks would stay pinned against the context cleaner
-  // for the session, contradicting the loop-state contract above.
-  // Reasons are extracted eagerly at registration
-  // ([[WidthRisk.ownReasons]], one plan walk — cheap next to the
-  // materialization itself) and TRANSITIVELY: a registered plan's own
-  // leaves are looked up in the registry and their reasons folded in
-  // with the `via checkpoint:` prefix, so chains of checkpoints
-  // (loop rounds) stay visible without retaining anything. Memory:
-  // bounded LRU of [[planRegistryCap]] string entries — dev/CI
-  // introspection, not a correctness structure; eviction only
-  // re-opens the blind spot for ancient frames.
-  // --------------------------------------------------------------------
-
-  private sealed trait PlanKey
-  private final case class RddKey(id: Int) extends PlanKey
-  private final case class PathKey(path: String) extends PlanKey
-
-  private val planRegistryCap = 512
-  private[this] val planRegistry =
-    new java.util.LinkedHashMap[PlanKey, Vector[String]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[PlanKey, Vector[String]]): Boolean =
-        size > planRegistryCap
-    }
-
-  private def normalizePath(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
-  /** The registry key a downstream plan will use to reach this
-    * materialized frame: its LogicalRDD's rdd id (localCheckpoint) or
-    * its scan path (reliable parquet round-trip). */
-  private def keyOfMaterialized(out: DataFrame): Option[PlanKey] =
-    try out.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        Some(RddKey(lr.rdd.id))
-      case _ =>
-        out.queryExecution.analyzed.collectLeaves().collectFirst {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-              if l.relation.isInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation] =>
-            PathKey(normalizePath(l.relation
-              .asInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .location.rootPaths.head.toString))
-        }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Extract-and-store: `plan`'s own reasons plus (prefixed) whatever
-    * the registry already holds for `plan`'s leaves — the transitive
-    * closure is computed HERE, string-only, so nothing retains the
-    * plan or its checkpointed RDDs. Empty reason sets are not stored
-    * (they would only evict entries that carry information). */
-  private def registerPlan(key: PlanKey, plan: LogicalPlan): Unit = {
-    val reasons = (WidthRisk.ownReasons(plan) ++
-      reasonsForLeaves(plan).map(r => s"via checkpoint: $r")).distinct.toVector
-    if (reasons.nonEmpty) planRegistry.synchronized {
-      planRegistry.put(key,
-        (Option(planRegistry.get(key)).getOrElse(Vector.empty) ++ reasons)
-          .distinct)
-      ()
-    }
-  }
-
-  /** Best-effort: record `pre`'s optimized plan's reasons as what
-    * `out` hides. Never throws — detector support must not break an
-    * operator. */
-  private def recordPre(out: DataFrame, pre: DataFrame): Unit =
-    try keyOfMaterialized(out)
-      .foreach(registerPlan(_, pre.queryExecution.optimizedPlan))
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Attach an AUXILIARY plan to an already-materialized frame — for
-    * width-sensitive machinery that ran as a separate collected action
-    * feeding the materialized pass (PrefixSum's `percentile_approx`
-    * splitter sketch is the canonical caller: its sketch never appears
-    * in the returned plan, but its width sensitivity is exactly what
-    * the detector must see). */
-  def attachAux(materialized: DataFrame, aux: DataFrame): Unit =
-    try keyOfMaterialized(materialized)
-      .foreach(registerPlan(_, aux.queryExecution.optimizedPlan))
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Every registered reason reachable from `plan`'s leaves — the
-    * detector's view through this module's lineage truncations.
-    * Transitive closure is baked into the stored strings at
-    * registration time (see [[registerPlan]]), so one leaf lookup is
-    * the whole recursion. */
-  def registeredReasons(plan: LogicalPlan): Seq[String] =
-    reasonsForLeaves(plan)
-
-  private def reasonsForLeaves(plan: LogicalPlan): Seq[String] = {
-    val keys: Seq[PlanKey] = plan.collectLeaves().flatMap {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        Seq(RddKey(lr.rdd.id))
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(p => PathKey(p.toUri.getPath)).toSeq
-          case _ => Nil
-        }
-      case _ => Nil
-    }
-    planRegistry.synchronized {
-      keys.flatMap(k => Option(planRegistry.get(k)).getOrElse(Vector.empty))
-    }.distinct
-  }
-
   /** Eagerly materialize an operator result and release its
     * intermediate caches — released even when materialization fails,
     * so an error path never pins executor storage. */
   def materialize(result: DataFrame, intermediates: DataFrame*): DataFrame =
-    try {
-      val out = result.localCheckpoint()
-      recordPre(out, result)
-      out
-    } finally intermediates.foreach(_.unpersist(blocking = false))
+    try result.localCheckpoint()
+    finally intermediates.foreach(_.unpersist(blocking = false))
 
   /** Loop-state checkpoint: (frame, reliable-checkpoint path). The
     * path is None on the localCheckpoint fallback; pass it to [[drop]]
@@ -215,14 +83,8 @@ object Checkpoints {
         val path = s"$dir/graft-${java.util.UUID.randomUUID()}"
         df.write.parquet(path)
         // explicit schema: the round-trip must not re-infer nullability
-        val out = sess.read.schema(df.schema).parquet(path)
-        registerPlan(PathKey(normalizePath(path)),
-          df.queryExecution.optimizedPlan)
-        (out, Some(path))
-      case None =>
-        val out = df.localCheckpoint()
-        recordPre(out, df)
-        (out, None)
+        (sess.read.schema(df.schema).parquet(path), Some(path))
+      case None => (df.localCheckpoint(), None)
     }
   }
 

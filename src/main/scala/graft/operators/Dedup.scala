@@ -439,22 +439,13 @@ object Dedup {
     *         at least one id from `newBatch` */
   def minhashLshAppend(index: MinhashIndex, newBatch: DataFrame,
       textCol: String, threshold: Double = 0.7): DataFrame = {
-    // stage timing for profiling (Scratch appendstages). WARN level:
-    // the profiling harness itself runs at root level WARN, so an
-    // info-level line would be silenced in the only path that sets
-    // the env var
-    def dbg[A](label: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_APPEND_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        log.warn(s"[append] $label: ${(System.nanoTime() - t0) / 1e9} s"); r
-      } else f
     val idCol = index.idCol
     val shNew = hashedShingled(newBatch, idCol, textCol, index.shingleSize)
     val sigsNew = minhashSignatures(shNew, idCol, index.numHashes)
     // owned width off the new batch (shingle-frame row count == doc
     // count, as in minhashLshPlan); the pruned old side co-partitions
     // to it in the join
-    val nParts = partsFor(dbg("shNew.count")(shNew.count()) * index.bands,
+    val nParts = partsFor(shNew.count() * index.bands,
       newBatch.sparkSession)
     // persisted AND eagerly materialized. Three subplans read this
     // frame (semi-join build side, union leg, join side a); exchange
@@ -469,7 +460,7 @@ object Dedup {
     // the corpus-scale work it prevents re-running.
     val newBuckets = signatureBuckets(sigsNew, idCol, index.numHashes, index.bands)
       .repartition(nParts, col("band"), col("bucket")).persist()
-    dbg("newBuckets.count")(newBuckets.count())
+    newBuckets.count()
     val hitOld = index.buckets.join(
       newBuckets.select("band", "bucket"), Seq("band", "bucket"), "left_semi")
     val allBuckets = hitOld.unionByName(newBuckets)
@@ -492,7 +483,7 @@ object Dedup {
       // re-deriving the old-side signatures each time — measured 5x+
       // on q75 at sf0.1. Pairs-sized, so the action is cheap.
       .persist()
-    dbg("candidates.count")(candidates.count())
+    candidates.count()
     // the verify reads one shingle frame covering both sides: the
     // index's shingles cut down to candidate ids (tiny semi-join),
     // the new batch's shingles winning on any id overlap. No DISTINCT
@@ -505,8 +496,8 @@ object Dedup {
       .join(candIds, Seq(idCol), "left_semi")
       .join(shNew.select(col(idCol)), Seq(idCol), "left_anti")
       .unionByName(shNew.join(candIds, Seq(idCol), "left_semi"))
-    dbg("finish")(finish(verifyJaccard(candidates, shAll, idCol, threshold),
-      shNew, newBuckets, candidates))
+    finish(verifyJaccard(candidates, shAll, idCol, threshold),
+      shNew, newBuckets, candidates)
   }
 
   /** Documents → (id, sh: array<long>) of 60-bit-hashed distinct word
@@ -1078,8 +1069,6 @@ object Dedup {
           .head().getDecimal(0)
       }
       converged = prevSum != null && prevSum.compareTo(sumNow) == 0
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $i labelSum=$sumNow")
       prevSum = sumNow
       prop.unpersist(blocking = false)
       Checkpoints.drop(labels._1, labels._2)

@@ -136,11 +136,6 @@ object PrefixSum {
         .withColumn("__bkt", bkt)
         .select(col("*") +: sumCols.map(c =>
           coalesce(sum(col(c)).over(wLoc), lit(0L)).as(s"__loc_$c")): _*))
-      // the splitter sketch ran as a separate collected action, so the
-      // returned plan cannot show its width sensitivity — attach it to
-      // the checkpoint's plan-registry entry so the width-risk walker
-      // sees percentile_approx through the truncation
-      Checkpoints.attachAux(local, sketch)
       val totals = local.groupBy(col("__bkt"))
         .agg(sum(sumCols.head).as(s"__t_${sumCols.head}"),
           sumCols.tail.map(c => sum(c).as(s"__t_$c")): _*)

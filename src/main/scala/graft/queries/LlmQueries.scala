@@ -2044,7 +2044,7 @@ object LlmQueries {
         .select("doc_id", "ts", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(dir)
       val sink = s"q91_sink_${q91Runs.incrementAndGet()}"
-      graft.streaming.StreamPlans.runAvailableNowMemory(
+      graft.streaming.EventStream.runToMemory(
         graft.streaming.CorpusStream.sourceQualityWindows(
           graft.streaming.CorpusStream.readStream(s, dir)),
         sink, org.apache.spark.sql.streaming.OutputMode.Complete())
@@ -3519,7 +3519,7 @@ object LlmQueries {
           col("token").as("_2"))
         .as[(Long, String)]
       val sink = s"q173_sink_${q145Runs.incrementAndGet()}"
-      graft.streaming.StreamPlans.runAvailableNowMemory(
+      graft.streaming.EventStream.runToMemory(
         graft.streaming.CorpusStream.mgCandidates(toks, capacity).toDF(),
         sink, org.apache.spark.sql.streaming.OutputMode.Update())
       // the memory sink owns the rows now; the staged source dir is dead
@@ -3577,7 +3577,7 @@ object LlmQueries {
           coalesce(col("props"), lit("")).as("props"))
         .write.mode("overwrite").parquet(dir)
       val sink = s"q145_sink_${q145Runs.incrementAndGet()}"
-      graft.streaming.StreamPlans.runAvailableNowMemory(
+      graft.streaming.EventStream.runToMemory(
         graft.streaming.EventStream.ewmaDaily(
           graft.streaming.EventStream.readStream(s, dir)
             .drop("props").as[graft.streaming.EventStream.Event]).toDF(),

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming operators over the events stream (SURVEY §2.9:
@@ -264,6 +264,17 @@ object EventStream {
   def runAvailableNow(spark: SparkSession, dir: String, sink: String,
       transform: DataFrame => DataFrame,
       mode: OutputMode = OutputMode.Complete()): Unit =
-    StreamPlans.runAvailableNowMemory(transform(readStream(spark, dir)),
-      sink, mode)
+    runToMemory(transform(readStream(spark, dir)), sink, mode)
+
+  /** The one way this library runs a stream into a memory sink: runs
+    * `stream` with `Trigger.AvailableNow` under `queryName(sink)` and
+    * waits until it has processed everything available. */
+  def runToMemory(stream: DataFrame, sink: String, mode: OutputMode): Unit =
+    stream.writeStream
+      .format("memory")
+      .queryName(sink)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 }

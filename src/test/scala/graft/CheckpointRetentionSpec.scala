@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.operators.Checkpoints
-
-/** Lifetime contracts of the checkpoint plan registry and the Tables
-  * read memo — both are caches whose ENTRIES must not extend the
-  * lifetime of heavyweight session objects (checkpointed RDD blocks,
-  * SparkSessions) they merely describe.
-  *
-  * The registry half is the r10 ADVICE retention finding: the registry
-  * used to store pre-materialization [[org.apache.spark.sql.catalyst
-  * .plans.logical.LogicalPlan]]s, whose LogicalRDD leaves strongly
-  * reference the checkpointed RDDs of every prior loop round — a
-  * <cap-entry iterative job never evicted, so superseded rounds'
-  * corpus-scale blocks stayed pinned against the context cleaner for
-  * the whole session. It now stores extracted reason STRINGS; these
-  * tests pin that (a) the detector still sees through the truncation
-  * and (b) the registered plan object itself is collectable the moment
-  * the caller drops it.
+/** Lifetime contract of the Tables read memo: a cache whose ENTRIES
+  * must not extend the lifetime of the SparkSessions they merely
+  * describe. WidthDiff cycles two fresh sessions per declared query,
+  * so a memo that pinned them would hold hundreds of sessions for the
+  * test run. A session dropped by its caller must stay collectable.
   */
 class CheckpointRetentionSpec extends SparkSpec {
 
@@ -36,38 +23,10 @@ class CheckpointRetentionSpec extends SparkSpec {
     ref.get() == null
   }
 
-  test("plan registry keeps the reasons but not the plan (attachAux)") {
-    val base = Checkpoints.materialize(
-      spark.range(100).toDF("id"))
-    // a width-risky aux action (fp avg), attached then DROPPED
-    var aux = spark.range(100)
-      .agg(avg(col("id").cast("double")).as("m"))
-    Checkpoints.attachAux(base, aux)
-    val planRef = new java.lang.ref.WeakReference[AnyRef](
-      aux.queryExecution.optimizedPlan)
-    // the reasons must be visible through the truncation...
-    val reasons = Scratch.planRiskReasons(base.queryExecution.logical)
-    assert(reasons.exists(r => r.startsWith("via checkpoint:") &&
-        r.contains("avg over Double/Float")),
-      s"attachAux reasons not visible through the truncation: $reasons")
-    // ...while the plan object itself is collectable once dropped: the
-    // registry holds strings, not the plan (which would pin its
-    // LogicalRDD leaves' checkpointed blocks in a real loop)
-    aux = null
-    assert(collected(planRef),
-      "the registry (or something it feeds) still strongly retains a " +
-        "registered plan after the caller dropped it — checkpointed " +
-        "loop-round blocks would stay pinned for the session")
-    // and dropping the plan must NOT lose the recorded reasons
-    val after = Scratch.planRiskReasons(base.queryExecution.logical)
-    assert(after.exists(_.contains("avg over Double/Float")),
-      s"reasons lost after the plan was collected: $after")
-  }
-
   test("Tables memo does not retain dropped sessions") {
     val dir = "/root/testdata/sf0.001"
     val before = Tables.memoSessionCount
-    // cycle sessions the way widthDiff does (build-only, no action) and
+    // cycle sessions the way WidthDiff does (build only here) and
     // keep weak handles so we can prove they were actually collected —
     // not just expunged while still alive
     var refs = (1 to 3).map { _ =>
@@ -89,20 +48,5 @@ class CheckpointRetentionSpec extends SparkSpec {
     assert(allCollected,
       "a dropped SparkSession used as a memo key was never collected — " +
         "the memo (or the frames it holds) strongly retains sessions")
-  }
-
-  test("chained checkpoints stay visible transitively as strings") {
-    // round 1: risky reducer, materialized (truncates)
-    val r1 = Checkpoints.materialize(
-      spark.range(50).groupBy((col("id") % 5).as("g"))
-        .agg(avg(col("id").cast("double")).as("m")))
-    // round 2: derived from round 1's truncated frame, materialized
-    // again — the detector must see round 1's reducer through BOTH
-    // truncations (the loop-round chain)
-    val r2 = Checkpoints.materialize(r1.select(col("g"), col("m") * 2))
-    val reasons = Scratch.planRiskReasons(r2.queryExecution.logical)
-    assert(reasons.exists(r => r.contains("via checkpoint:") &&
-        r.contains("avg over Double/Float")),
-      s"chained truncation hid a risky reducer from the detector: $reasons")
   }
 }

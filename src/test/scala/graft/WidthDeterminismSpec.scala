@@ -1,200 +1,29 @@
 package graft
 
-/** Partition-width determinism gate — the q95 lesson, converted from
-  * driver-discovered to build-time-caught: Spark's partial-aggregation
-  * order varies with scan/shuffle width, so any `round(avg(double),
-  * p)`-shaped reducer can flip an output digit between a narrow and a
-  * wide run (r7's one red row: band (2, src8) avg_score read
-  * −3.401753 at 32-wide vs −3.401754 at the 3/8-wide runs that
-  * matched the oracle). Every query here runs under a narrow
-  * (3 shuffle partitions, 1 scan split) and a wide (32/32) session
-  * and must produce IDENTICAL collected rows — the assertion is
-  * [[Scratch.widthDiff]], the same comparator the dev loop uses.
+/** Partition-width determinism gate for every declared query.
   *
-  * The default set is the RISK set, one test per query so a failure
-  * localizes: every query whose reduction runs over derived doubles
-  * (money/ratio/LM-score averages), the rank-statistic family now on
-  * [[graft.operators.PrefixSum]] (whose approx-quantile cuts ARE
-  * width-sensitive — exactness must not depend on them), the
-  * bootstrap/outlier statistics, the streaming-windowed average, and
-  * every query [[Scratch.widthRiskReasons]]'s plan walk flags. The
-  * set is SELF-ENROLLING: a final gate scans every other declared
-  * query's optimized plan and width-tests anything the detector
-  * flags, so a new risky reducer is gated the build it lands without
-  * a spec edit (the hand lists remain the floor for the detector's
-  * blind spots — checkpoint-truncated and streaming plans).
-  * `SPARK_GRAFT_WIDTH_ALL=1` widens the gate to every declared query
-  * (the ~6-minute full sweep; dev/CI-nightly, not the default build).
+  * The q95 lesson: Spark's partial-aggregation order follows the scan
+  * and shuffle widths Catalyst plans, so a `round(avg(double), p)`
+  * reducer can flip an output digit between a narrow and a wide run
+  * (r7's one red row: band (2, src8) avg_score read −3.401753 at
+  * 32-wide vs −3.401754 at the 3/8-wide runs that matched the
+  * oracle). Width sensitivity is a property of the whole plan —
+  * checkpoints, streams and sketches included — so no query is
+  * singled out: every entry of [[SparkEntry.queries]] runs under a
+  * narrow (3 shuffle partitions, 1 scan split) and a wide (32/32)
+  * session and must collect IDENTICAL rows ([[WidthDiff]]). One test
+  * per query, so a failure names its query. `WidthDiffSpec` shows the
+  * comparator can fail.
   */
 class WidthDeterminismSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  /** Money/ratio/score averages over doubles, the exact q95 class. */
-  private val doubleReducers = Seq(
-    "q01_pricing_summary",     // round(avg(l_discount), 6)
-    "q14_price_tiers",         // round(avg(p_retailprice), 2)
-    "q16_quality_ratios",      // round(avg(flag), 4) ratio trio
-    "q35_rule_chains",         // round(avg(days_to_ship), 2)
-    "q37_segment_priority",    // round(avg(o_totalprice), 2)
-    "q39_kpis",                // KPI money averages
-    "q123_rolling_daily")      // windowed avg over daily doubles
-
-  /** LM scores: nano-unit longs end-to-end since r7 — must stay so. */
-  private val lmScores = Seq(
-    "q80_unigram_lm_score", "q83_bigram_lm", "q95_ppl_buckets",
-    "q116_kneser_ney")
-
-  /** Rank statistics on [[graft.operators.PrefixSum]]: the bucketing
-    * sketch is width-sensitive by construction, the results must not
-    * be; plus the sibling order statistics. */
-  private val rankFamily = Seq(
-    "q142_revenue_concentration", "q152_mann_whitney", "q154_spearman",
-    "q155_ks_test", "q167_classifier_auc", "q169_gains_table",
-    "q170_bootstrap_ci", "q174_mad_outliers")
-
-  /** Other width-shaped reducers worth pinning. The streaming trio
-    * (q91/q145/q173) is NO LONGER hand-floored here: every
-    * memory-sink stream records its plan in
-    * [[graft.streaming.StreamPlans]], so the self-enrollment gate
-    * below sees inside streams mechanically via
-    * [[Scratch.queryRiskReasons]] and width-tests them there (the
-    * detector-backing test pins that they stay flagged). */
-  private val others = Seq(
-    "q113_embedding_drift",        // per-dimension double means
-    "q189_interval_overlap_join",  // bucket-blocked join, no dedup shuffle
-    "q148_containment_pairs")      // prefix-length ceil over doubles
-
-  /** Every query [[Scratch.widthRiskReasons]] flags beyond the groups
-    * above (avg/sum over Double/Float somewhere in the optimized
-    * plan) — enrolled as pinned per-query tests so a failure
-    * localizes; the self-enrollment gate below keeps this list
-    * honest mechanically. */
-  private val detectedFloats = Seq(
-    "q04_star_revenue", "q10_top_customers", "q15_event_rollup",
-    "q21_merge_type1", "q22_scd2_apply", "q24_point_in_time",
-    "q36_sales_by_category_year", "q38_returns_by_category",
-    "q43_event_windows", "q44_rollup_totals", "q46_order_timeline",
-    "q47_session_windows", "q51_hash_sample", "q57_cube_grouping",
-    "q62_pq_topk", "q63_ivfpq_topk", "q64_zscore_outliers",
-    "q69_ann_recall", "q90_zipf_fit", "q94_dsir_weights",
-    "q115_rbo_eval", "q131_winsorized_stats", "q187_sql_surface",
-    // flagged only since the r10 checkpoint plan registry let the
-    // detector see through Checkpoints.materialize truncations
-    // (fp reducers in their pre-materialization plans):
-    "q85_kl_drift", "q99_dup_ngram_mass", "q120_rfm_segments",
-    "q129_attribution", "q135_rank_eval", "q140_benford_audit",
-    "q141_categorical_assoc", "q153_psi_drift", "q165_js_drift")
-
-  private val riskSet =
-    doubleReducers ++ lmScores ++ rankFamily ++ others ++ detectedFloats
-
-  riskSet.foreach { name =>
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
     test(s"$name is identical at narrow (3/1) and wide (32/32) widths") {
-      assert(SparkEntry.queries.contains(name),
-        s"$name is not a declared query — update the risk set")
-      assert(!Scratch.widthDiff(spark, name, sfDir, verbose = true),
-        s"$name output depends on partition width — see diff above")
+      val diff = WidthDiff(spark, SparkEntry.queries(name), sfDir)
+      assert(diff.isEmpty,
+        s"$name output depends on partition width:${WidthDiff.render(diff)}")
     }
-  }
-
-  /** Self-enrollment gate: the risk set above must never silently go
-    * stale. Every declared query outside it gets its OPTIMIZED plan
-    * walked by [[Scratch.widthRiskReasons]] (cheap sf0.001 build —
-    * plan shape is scale-independent); anything detected is
-    * width-tested RIGHT HERE, so a new `round(avg(double))`-shaped
-    * query is gated the build it lands, whether or not anyone
-    * remembers to enroll it. Since r10 the gate scans with
-    * [[Scratch.queryRiskReasons]], which has NO structural blind
-    * spot: checkpoint-truncated plans recurse through the
-    * [[graft.operators.Checkpoints]] plan registry, and streaming
-    * queries surface via [[graft.streaming.StreamPlans]] — the pinned
-    * lists above are per-test localization conveniences, no longer a
-    * load-bearing floor (the detector-backing test pins that). */
-  test("self-enrollment: plan-detected width risks outside the risk set are width-tested") {
-    val detectDir = "/root/testdata/sf0.001"
-    val flagged = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(riskSet.contains).flatMap { name =>
-        val reasons =
-          try Scratch.queryRiskReasons(spark, name, detectDir)
-          catch { case e: Throwable =>
-            Seq(s"PLAN BUILD FAILED: ${String.valueOf(e.getMessage).take(120)}") }
-        if (reasons.isEmpty) Nil else Seq(name -> reasons)
-      }
-    assert(!flagged.exists(_._2.exists(_.startsWith("PLAN BUILD FAILED"))),
-      s"queries failed to build during the risk scan: $flagged")
-    val unstable = flagged.map(_._1)
-      .filter(name => Scratch.widthDiff(spark, name, sfDir, verbose = true))
-    assert(unstable.isEmpty,
-      s"width-DEPENDENT queries not in the risk set: ${unstable.mkString(", ")}")
-    if (flagged.nonEmpty)
-      info(s"width-stable but detector-flagged — enroll in detectedFloats " +
-        s"for per-test localization: ${flagged.map(_._1).mkString(", ")}")
-  }
-
-  /** Detector-backing: the r9 blind-spot queries (the streaming trio
-    * and the PrefixSum rank family) must be FLAGGED by the mechanized
-    * detector — this is what converts their presence in the pinned
-    * lists / the gate from hand-curated floor to detector-derived
-    * fact. If the plan-registry or stream-registry plumbing regresses,
-    * this fails before the blind spot can silently reopen. */
-  test("detector flags the former blind spots: streaming trio + PrefixSum family") {
-    val detectDir = "/root/testdata/sf0.001"
-    val mustFlag = Seq(
-      "q91_stream_quality_windows",  // windowed avg over double in-stream
-      "q145_stream_ewma",            // flatMapGroupsWithState state
-      "q173_stream_heavy_hitters",   // mapGroupsWithState MG sketch
-      "q152_mann_whitney",           // PrefixSum splitter sketch via registry
-      "q167_classifier_auc")         // same machinery through Ranking.auc
-    val missed = mustFlag.filter { name =>
-      Scratch.queryRiskReasons(spark, name, detectDir).isEmpty
-    }
-    assert(missed.isEmpty,
-      s"detector no longer flags former blind-spot queries: " +
-        s"${missed.mkString(", ")} — the StreamPlans/Checkpoints plan " +
-        "registry plumbing has regressed")
-    // and the REASONS must come from the mechanized paths, not a
-    // coincidental batch-plan reducer: a stream-recorded reason for
-    // the trio, a checkpoint-recursed reason for the rank family
-    val q91r = Scratch.queryRiskReasons(spark, "q91_stream_quality_windows", detectDir)
-    assert(q91r.exists(_.startsWith("stream[")), s"q91 reasons not stream-derived: $q91r")
-    val q152r = Scratch.queryRiskReasons(spark, "q152_mann_whitney", detectDir)
-    assert(q152r.exists(r => r.startsWith("via checkpoint:") &&
-        r.contains("percentile_approx")),
-      s"q152 reasons not checkpoint-recursed to the splitter sketch: $q152r")
-  }
-
-  /** Planted-risky-stream: a NEW stream with a width-risky reducer
-    * (avg over double) must be flagged the moment it runs through the
-    * library's stream runner — proves enrollment for future streaming
-    * queries, not just the current trio. */
-  test("a planted risky stream enrolls via StreamPlans mechanically") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_planted_").toString
-    Tables.events(spark, "/root/testdata/sf0.001").limit(200)
-      .write.mode("overwrite").parquet(dir)
-    val mark = graft.streaming.StreamPlans.mark()
-    val stream = graft.streaming.EventStream.readStream(spark, dir)
-      .groupBy(col("event_type"))
-      .agg(avg(col("value")).as("avg_value"))
-    graft.streaming.StreamPlans.runAvailableNowMemory(stream,
-      "planted_risky_stream_sink",
-      org.apache.spark.sql.streaming.OutputMode.Complete())
-    val reasons = graft.streaming.StreamPlans.since(mark).flatMap {
-      case (sink, p) => Scratch.planRiskReasons(p).map(r => s"stream[$sink]: $r")
-    }
-    assert(reasons.exists(r => r.contains("planted_risky_stream_sink") &&
-        r.contains("avg over Double/Float")),
-      s"planted risky stream was not flagged: $reasons")
-  }
-
-  if (sys.env.get("SPARK_GRAFT_WIDTH_ALL").contains("1")) {
-    SparkEntry.queries.keys.toSeq.sorted.filterNot(riskSet.contains)
-      .foreach { name =>
-        test(s"[all] $name is width-stable") {
-          assert(!Scratch.widthDiff(spark, name, sfDir, verbose = true),
-            s"$name output depends on partition width — see diff above")
-        }
-      }
   }
 }
