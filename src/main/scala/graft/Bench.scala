@@ -14,21 +14,10 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER: run the identical bench under
-    // local-cluster[n,c,mem] (multi-process executors). The official
-    // A/B records stay local[32] — paired ratios need the quieter
-    // substrate — so this is the cross-boundary smoke, not the grade.
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // r11: AQE-sized cached-plan partitioning (see Verify.scala for
-      // the rationale; SPARK_GRAFT_CACHED_AQE=0 restores the default)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        (!sys.env.get("SPARK_GRAFT_CACHED_AQE").contains("0")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER=local-cluster[n,c,mem] runs the identical
+    // bench under multi-process executors: the cross-boundary smoke,
+    // not the grade (paired ratios need the quieter local substrate)
+    val spark = Sessions.fromEnv()
     // uncounted warmup: absorb session init, parquet footer reads and
     // first-stage codegen/JIT so the first measured query isn't charged
     // for one-time JVM costs (standard benching practice; each query

@@ -1,36 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER lets the SAME contract run under
-    // local-cluster[n,c,mem] — real executor JVMs, real closure/
-    // expression serialization, real block fetches — the multi-process
-    // gate local[k] can never provide. Executor classpath/JVM flags
-    // ride in as ordinary -Dspark.executor.* system properties
-    // (SparkConf loads them), so no code here special-cases cluster
-    // mode beyond the master string.
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r11: let AQE size CACHED plans' output partitioning (off by
-      // default upstream). Persisted frames otherwise inherit the raw
-      // pre-AQE exchange width — e.g. a union of two aggregates caches
-      // at 2x shuffle.partitions blocks however tiny the data — and
-      // every loop round / downstream consumer then pays a task per
-      // near-empty cached block. Scale-adaptive by construction (AQE
-      // targets advisory bytes, so corpus-scale caches keep full
-      // width); SPARK_GRAFT_CACHED_AQE=0 restores the upstream default.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        (!sys.env.get("SPARK_GRAFT_CACHED_AQE").contains("0")).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (comma-separated query names); the driver
     // never sets it, so the shipped contract is the full dump

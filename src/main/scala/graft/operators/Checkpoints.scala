@@ -17,8 +17,8 @@ import org.apache.spark.sql.DataFrame
   *    `sc.setCheckpointDir`), rounds
   *    write a uniquely-named parquet dir and DELETE the superseded
   *    round's — executor loss mid-loop costs one round, not the whole
-  *    40-round job, and nothing accumulates. Without a dir (or with
-  *    `spark.graft.checkpoint=local`), falls back to localCheckpoint.
+  *    40-round job, and nothing accumulates. Without a dir, falls back
+  *    to localCheckpoint.
   *  - MID-OPERATOR CORPUS-SCALE PASSES ([[stableDeferred]]): a frame
   *    that (a) is corpus-scale, so losing an executor's partitions
   *    mid-job should not kill a cluster-scale run (ruling out bare
@@ -71,13 +71,11 @@ object Checkpoints {
     * once a later round supersedes the frame. */
   def stableTracked(df: DataFrame): (DataFrame, Option[String]) = {
     val sess = df.sparkSession
-    val mode = sess.conf.get("spark.graft.checkpoint", "auto")
     // session-scoped dir conf first (lets concurrent sessions of one
     // context use distinct checkpoint roots without mutating the
     // context-global sc.setCheckpointDir), context dir as fallback
     val base = Option(sess.conf.get("spark.graft.checkpoint.dir", null))
       .orElse(sess.sparkContext.getCheckpointDir)
-      .filter(_ => mode != "local")
     base match {
       case Some(dir) =>
         val path = s"$dir/graft-${java.util.UUID.randomUUID()}"

@@ -132,7 +132,7 @@ object Stats {
     val expected = (1 to 9).map(d => d -> math.log10(1.0 + 1.0 / d))
     val spark = df.sparkSession
     import spark.implicits._
-    val expDf = broadcast(expected.toDF("digit", "expected"))
+    val expDf = expected.toDF("digit", "expected")
     val digit = substring(floor(valueCol).cast("long").cast("string"), 1, 1)
       .cast("int")
     // the upper bound (the largest double below 2^63) keeps the long
@@ -403,7 +403,7 @@ object Stats {
     val width = (hi - lo) / nBins
     val bin = greatest(lit(0), least(lit(nBins - 1),
       floor((valueCol - lo) / width))).cast("long")
-    val allBins = broadcast((0 until nBins).map(_.toLong).toDF("bin"))
+    val allBins = (0 until nBins).map(_.toLong).toDF("bin")
     val counts = df
       .where(pSide.isNotNull && valueCol.isNotNull &&
         !isnan(valueCol.cast("double")))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic k× scale-up of the driver testdata, for the scale
@@ -62,14 +62,7 @@ object ScaleGen {
     val k = args(1).toInt
     val srcDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     require(k >= 1 && k <= 100, s"k must be in [1,100], got $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.fromEnv()
 
     // one broadcast k-row frame; crossJoin fans each source row into
     // its k replicas in a single narrow pass (no shuffle)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only companion to the r10 scale curve (SCALE_CURVE.md): the two
@@ -22,14 +21,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val strides = args(1).split(",").map(_.trim)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.fromEnv()
     import graft.operators.Similarity
     val emb = graft.Tables.embeddings(spark, dir)
     val n = emb.count()

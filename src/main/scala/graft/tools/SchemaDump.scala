@@ -1,14 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: print the driver testdata schemas (runMain graft.tools.SchemaDump). */
 object SchemaDump {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.fromEnv()
     Seq("documents", "embeddings", "events", "orders", "lineitem").foreach { t =>
       val df = graft.Tables(spark, dir, t)
       println(s"== $t rows=${df.count()}")

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites: UTC, small shuffle width, UI
-  * off — the same shape the driver's Verify/Bench mains use. */
+/** Shared local session for all suites, built by [[Sessions.build]]
+  * like every main's, at a fixed 4 cores: the test command exports
+  * `SPARK_GRAFT_CPUS=$(nproc)`, so the env reader would make test
+  * widths follow the machine. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,10 +16,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = Sessions.build(4, "local[4]")
 }
